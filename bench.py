@@ -82,7 +82,7 @@ def main() -> None:
             _shutil.rmtree(r, ignore_errors=True)
 
 
-def _run_chain(spark, root: str, plain, n_rows: int, cpus: int) -> tuple[dict, dict]:
+def _run_chain(spark, root: str, plain, n_rows: int) -> tuple[dict, dict]:
     """One full maintenance chain on a fresh table at ``root``.
     Returns (per-phase timings, meta: digest/files/bytes)."""
     from pi2spark.crypto import broadcast_keys, decrypt_table, encrypt_table
@@ -116,7 +116,7 @@ def _run_chain(spark, root: str, plain, n_rows: int, cpus: int) -> tuple[dict, d
     )
 
     t0 = time.time()
-    rc = compact(t, spark, target_file_bytes=target_bytes, concurrency=cpus)
+    rc = compact(t, spark, target_file_bytes=target_bytes)
     timings["compact"] = time.time() - t0
 
     t0 = time.time()
@@ -131,7 +131,7 @@ def _run_chain(spark, root: str, plain, n_rows: int, cpus: int) -> tuple[dict, d
     t0 = time.time()
     reg.forget(rare)
     reg.forget(mid)
-    rs = shred_pass(t, spark, [rare, mid], target_file_bytes=target_bytes, concurrency=cpus)
+    rs = shred_pass(t, spark, [rare, mid], target_file_bytes=target_bytes)
     timings["shred"] = time.time() - t0
 
     t0 = time.time()
@@ -191,7 +191,7 @@ def _main(root_holder: list) -> None:
         noise_probes.append(round(_noise_probe(), 3))
         root = tempfile.mkdtemp(prefix=f"pi2spark-bench-t{i}-")
         root_holder.append(root)
-        trial_timings, trial_meta = _run_chain(spark, root, plain, n_rows, cpus)
+        trial_timings, trial_meta = _run_chain(spark, root, plain, n_rows)
         shutil.rmtree(root, ignore_errors=True)
         all_trials.append(trial_timings)
         if meta is None:

@@ -98,7 +98,7 @@ def main() -> None:
             target_bytes = max(input_bytes // 64, 8 << 20)
 
             with clock("compact.total"):
-                compact(tbl, spark, target_file_bytes=target_bytes, concurrency=cpus)
+                compact(tbl, spark, target_file_bytes=target_bytes)
 
             # --- zorder broken into key+shuffle+write vs stats
             from pi2spark.zorder import (
@@ -177,8 +177,7 @@ def main() -> None:
             reg.forget(rare)
             reg.forget(mid)
             with clock("shred.total"):
-                shred_pass(tbl, spark, [rare, mid], target_file_bytes=target_bytes,
-                           concurrency=cpus)
+                shred_pass(tbl, spark, [rare, mid], target_file_bytes=target_bytes)
             with clock("expire.total"):
                 expire_snapshots(tbl, keep_last=1)
             keys2 = broadcast_keys(spark, reg.key_map())

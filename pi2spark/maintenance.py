@@ -1,50 +1,62 @@
 """Maintenance passes: compaction, Z-order clustering, MERGE-shred,
-snapshot expiry (SURVEY.md §2 B3/B4/B7/B8/B9/B10).
+predicate DELETE/UPDATE, key rotation, snapshot expiry (SURVEY.md §2
+B3/B4/B7/B8/B9/B10).
 
-Execution model
----------------
-Compaction and shred rewrite their input files in **waves**: one wave
-= ONE Spark scan-and-write job over all of the wave's files, with
-**Spark's own scan packing doing the bin planning** —
-``spark.sql.files.maxPartitionBytes`` is set to the target file size
-(and ``openCostInBytes`` to 0) for the duration of the job, so the
-FileSourceScan packs small files into ~target-size partitions
-(greedy by size, the same first-fit idea as Iceberg's binpack) and
-the writer emits exactly one ~target-size file per partition. No
-shuffle at all; ciphertext moves opaquely (crypto is NOT re-run —
-the envelope column is just bytes to these passes). An oversized
-input splits across partitions (parquet is splittable) and simply
-yields several right-sized outputs.
+Rewrite passes
+--------------
+``compact``, ``cluster``, ``shred``, ``merge_into``, ``delete_where``,
+``update_where`` and ``reencrypt`` are copy-on-write rewrites run by
+one driver, ``_rewrite_pass``. Each pass is a spec: ``plan(snapshot)``
+returns a ``_Plan`` — the files to rewrite, files to drop whole with
+no rewrite, an optional custom ``rewrite``, and the pass's own
+snapshot-summary and ``details`` fields — plus an optional narrow
+``transform`` and per-output ``sort_col`` for the default writer. The
+driver owns everything else:
 
-This is the third iteration of the pass's execution shape, chosen by
-measurement: round 2 ran one Spark job per bin from a driver thread
-pool (fixed ~0.3 s/job driver cost → parallelism-independent floor,
-2→8-core efficiency 0.37); a union-of-coalesced-branches wave fixed
-the job floor but paid ~110 ms of py4j reader construction per
-branch plus O(branches²) union analysis on the driver. One reader
-per wave pays the listing ONCE (JVM-parallel), builds one plan, and
-leaves the driver idle while executors stream data.
+- the ``PassLedger`` (B10): a rerun of a committed ``pass_id`` is a
+  skip;
+- re-planning: the commit runs through ``Table.commit_with_retry`` (a
+  disjoint version race, e.g. a streaming append, re-applies the
+  delta). A ``StaleDeltaError`` — a racing pass rewrote this attempt's
+  inputs — drops the attempt's outputs, retracts its ledger tasks and
+  plans again from the fresh snapshot, up to ``max_replans`` times;
+- the one wave loop, ``_rewrite_files_in_waves``;
+- dropping 0-row outputs, and the ``PassResult``.
 
-Z-order is the only pass with a shuffle, and it is a single
-range-repartition on the cluster key with a tiebreaker column so
-mega-repo ties split across partitions (AQE-aware range
-partitioning, BASELINE.json:north_star).
+Waves
+-----
+The default writer rewrites a wave of up to ``DEFAULT_WAVE_FILES``
+inputs as ONE Spark scan-and-write job, with Spark's own scan packing
+doing the bin planning: ``spark.sql.files.maxPartitionBytes`` is the
+target file size and ``openCostInBytes`` is 0 (``_packer_session``),
+so the scan packs small files into ~target-size partitions (greedy by
+size, the same first-fit idea as Iceberg's binpack) and the writer
+emits one ~target-size file per partition. No shuffle; ciphertext
+moves opaquely (the envelope column is just bytes to these passes); an
+oversized input splits across partitions. ``cluster`` brings its own
+writers: its merge path writes each wave with ``rewrite_file_groups``
+(order-preserving, no shuffle), its shuffle path writes one wave with
+a single range repartition on the cluster key.
 
-Every pass takes a ``pass_id`` and writes a ``PassLedger`` (B10):
-killed mid-pass → rerun with the same id skips completed waves and
-commits exactly the same snapshot content.
-
-Scale notes (10^12-file ambition): ``wave_files`` (default 10^4)
-bounds the path list handed to one reader; a 10^6-file backlog runs
-as ~100 jobs, each fully distributed and shuffle-free.
+Resume rule
+-----------
+The ledger records one task per wave holding the wave's inputs and
+outputs. A rerun with the same ``pass_id`` reuses a recorded wave only
+when its recorded inputs are exactly what that wave is planned to
+rewrite now. Otherwise — e.g. an append landed between the crash and
+the rerun and shifted the plan — the attempt's recorded tasks are
+retracted and every wave runs again, so the pass commits what a clean
+run over the current snapshot would.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +71,7 @@ from pi2spark.errors import (
 from pi2spark.table import (
     ColumnPredicate,
     DataFile,
+    Snapshot,
     Table,
     collect_data_files,
     pack_consecutive,
@@ -67,7 +80,6 @@ from pi2spark.table import (
 from pi2spark.zorder import column_boundaries, column_boundaries_from_stats, with_cluster_key
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
-DEFAULT_CONCURRENCY = 8  # legacy knob, kept for CLI compat (wave mode ignores it)
 DEFAULT_WAVE_FILES = 10_000  # input files per rewrite wave (one Spark job each)
 
 
@@ -123,43 +135,68 @@ def _packer_session(spark: SparkSession, target_bytes: int):
     return packer
 
 
-def _rewrite_files_in_waves(
-    table: Table,
-    spark: SparkSession,
-    ledger,
-    files: list[DataFile],
-    tag: str,
-    target_bytes: int,
-    transform=None,
-    sort_col: str | None = None,
-    wave_files: int = DEFAULT_WAVE_FILES,
-    task_prefix: str = "",
-) -> list[dict]:
-    """Rewrite data files into ~``target_bytes`` outputs, one Spark job
-    per wave of ``wave_files`` inputs (see module docstring): the scan
-    packs inputs into target-size partitions (maxPartitionBytes =
-    target, openCost = 0), the optional ``transform`` (e.g. the shred
-    tombstone projection, a broadcast join) and per-partition
-    ``sort_col`` sort are narrow, and the writer emits one file per
-    partition. Zero shuffles, one listing, one plan.
+# ---------------------------------------------------------------------------
+# the rewrite driver (B3/B8/B10)
+# ---------------------------------------------------------------------------
 
-    Resume granularity is the wave: the ledger records one task per
-    wave with the wave's inputs/outputs; a rerun with the same pass_id
-    skips completed waves. Output stats are collected once per wave
-    (distributed via ``collect_data_files`` above its threshold)."""
+
+@dataclass
+class _Plan:
+    """One attempt of a rewrite pass, planned from the current
+    snapshot. ``files`` are rewritten (removed, replaced by the
+    outputs) and ``whole`` are removed with no rewrite. ``rewrite(files,
+    waves) -> outputs`` replaces the default writer; ``waves`` is the
+    wave loop bound to the pass's ledger and attempt. ``summary`` holds
+    the pass's snapshot-summary fields and ``details(outputs)`` its
+    ``PassResult.details`` fields; the driver adds ``pass_id`` to the
+    summary and ``replans`` to both."""
+
+    files: list[DataFile]
+    summary: dict
+    details: Callable[[list[DataFile]], dict]
+    whole: list[DataFile] = field(default_factory=list)
+    rewrite: Callable | None = None
+
+
+def _drop_attempt_outputs(
+    table: Table,
+    paths: list[str],
+    ledger: PassLedger | None = None,
+    task_prefix: str = "",
+) -> None:
+    """Best-effort removal of uncommitted outputs (``remove_orphans``
+    reclaims any survivor). When a ledger is given, the attempt's task
+    lineage is durably RETRACTED too: wave results pointing at the
+    deleted files must not survive, or a crash-replay of the same
+    pass_id would resume from them and commit manifest entries for
+    files that no longer exist."""
+    for p in paths:
+        try:
+            os.remove(os.path.join(table.root, p))
+        except OSError:
+            pass
+    if ledger is not None:
+        ledger.invalidate_tasks(task_prefix)
+
+
+def _outputs(results: list[dict]) -> list[DataFile]:
+    return [DataFile.from_json(d) for r in results for d in r["outputs"]]
+
+
+def _scan_packed_writer(table: Table, spark: SparkSession, target_bytes: int, transform, sort_col):
+    """The default wave writer (see module docstring): the scan packs
+    the wave's inputs into target-size partitions, the optional
+    ``transform`` (e.g. the shred tombstone projection, a broadcast
+    join) and per-partition ``sort_col`` sort are narrow, and the
+    writer emits one file per partition. Zero shuffles, one listing,
+    one plan; output stats are collected once per wave (distributed via
+    ``collect_data_files`` above its threshold)."""
     stat_cols = table.stats_columns()
     bloom_cols = table.bloom_columns()
     packer = _packer_session(spark, target_bytes)
-    results: list[dict] = []
-    for w, start in enumerate(range(0, len(files), wave_files)):
-        wave = files[start : start + wave_files]
-        task_id = f"{task_prefix}wave-{w:05d}"
-        prior = ledger.task_result(task_id)
-        if prior:
-            results.append(prior)
-            continue
-        s = time.time()
-        rel_dir, abs_dir = table.new_data_dir(f"{tag}-w{w:05d}")
+
+    def write(wave: list[DataFile], dir_tag: str) -> list[DataFile]:
+        rel_dir, abs_dir = table.new_data_dir(dir_tag)
         paths = [os.path.join(table.root, f.path) for f in wave]
         schema = table.data_schema()
         reader = packer.read.schema(schema) if schema is not None else packer.read
@@ -181,9 +218,55 @@ def _rewrite_files_in_waves(
             for n in sorted(os.listdir(abs_dir))
             if n.endswith(".parquet")
         ]
-        added = collect_data_files(
+        return collect_data_files(
             table.root, rels, stat_cols, spark=spark, bloom_cols=bloom_cols
         )
+
+    return write
+
+
+def _rewrite_files_in_waves(
+    table: Table,
+    spark: SparkSession,
+    ledger: PassLedger,
+    files: list[DataFile],
+    tag: str,
+    write,
+    pack=None,
+    task: str = "wave-{w:05d}",
+    task_prefix: str = "",
+) -> list[dict]:
+    """The wave loop: split ``files`` into waves of at most
+    ``DEFAULT_WAVE_FILES`` inputs and rewrite each with ``write(wave,
+    dir_tag) -> outputs`` (one Spark job). ``pack(files)`` groups
+    consecutive files that one wave must not split (default: none —
+    a group larger than a wave is a wave of its own). Each wave is one
+    ledger task, id ``task_prefix + task.format(w=w)``, recording the
+    wave's inputs and outputs.
+
+    Resume rule: a recorded wave is reused only when its recorded
+    inputs are exactly this wave's planned inputs. On any mismatch the
+    attempt's recorded tasks are retracted and every wave runs again.
+    Their outputs are left to ``remove_orphans``: a crash between the
+    table commit and the ledger's commit record leaves them live."""
+    waves: list[list[DataFile]] = []
+    for group in pack(files) if pack else ([f] for f in files):
+        if waves and len(waves[-1]) + len(group) <= DEFAULT_WAVE_FILES:
+            waves[-1].extend(group)
+        else:
+            waves.append(list(group))
+    task_ids = [task_prefix + task.format(w=w) for w in range(len(waves))]
+    priors = [ledger.task_result(t) for t in task_ids]
+    if any(p and p["inputs"] != [f.path for f in wave] for p, wave in zip(priors, waves)):
+        ledger.invalidate_tasks(task_prefix)
+        priors = [None] * len(waves)
+    results: list[dict] = []
+    for w, (wave, task_id, prior) in enumerate(zip(waves, task_ids, priors)):
+        if prior:
+            results.append(prior)
+            continue
+        s = time.time()
+        added = write(wave, f"{tag}-w{w:05d}")
         result = {
             "inputs": [f.path for f in wave],
             "outputs": [a.to_json() for a in added],
@@ -197,145 +280,114 @@ def _rewrite_files_in_waves(
     return results
 
 
-# ---------------------------------------------------------------------------
-# B3 — compaction (bin planning delegated to Spark's scan packing —
-# see module docstring; the explicit FFD planner this replaced lives
-# in git history)
-# ---------------------------------------------------------------------------
+def _current_snapshot(table: Table) -> Snapshot:
+    try:
+        return table.snapshot()
+    except Pi2SparkError:
+        if table.current_snapshot_id() is not None:
+            raise
+        return Snapshot(None, None, 0, "", [])  # a table with no commits yet
 
 
-def _drop_attempt_outputs(
+def _rewrite_pass(
     table: Table,
-    added: list[DataFile],
-    ledger: PassLedger | None = None,
-    task_prefix: str = "",
-) -> None:
-    """Best-effort removal of a re-planned attempt's orphaned outputs
-    (never committed — ``remove_orphans`` reclaims any survivor).
-    When a ledger is given, the attempt's task lineage is durably
-    RETRACTED too: wave results pointing at the deleted files must not
-    survive, or a crash-replay of the same pass_id would resume from
-    them and commit manifest entries for files that no longer exist."""
-    for a in added:
-        try:
-            os.remove(os.path.join(table.root, a.path))
-        except OSError:
-            pass
-    if ledger is not None:
-        ledger.invalidate_tasks(task_prefix)
-
-
-def _run_with_replans(
-    table: Table,
-    ledger: PassLedger,
+    spark: SparkSession,
     operation: str,
+    pass_id: str,
     max_replans: int,
-    attempt_fn,
-):
-    """The conflict re-planning protocol shared by every rewrite pass
-    (compact / shred / merge_into / reencrypt): plan an attempt from
-    the CURRENT snapshot, try to commit its delta, and on
-    ``StaleDeltaError`` (a racing pass rewrote this attempt's inputs —
-    the delta can never apply) drop the attempt's orphaned outputs,
-    durably retract its ledger lineage, and re-plan from the fresh
-    snapshot, up to ``max_replans`` times.
-
-    ``attempt_fn(attempt, task_prefix)`` returns either a finished
-    ``PassResult`` (nothing to do — the skip short-circuit) or a tuple
-    ``(added, removed_paths, summary, finish)`` where
-    ``finish(new_snap) -> PassResult`` builds the success result and
-    may also append extra ledger records. Disjoint version races (the
-    winner touched OTHER files) never reach this level —
-    ``commit_with_retry`` re-applies the delta internally."""
+    plan: Callable[[Snapshot], _Plan | None],
+    target_bytes: int,
+    transform=None,
+    sort_col: str | None = "zkey",
+) -> PassResult:
+    """Run one rewrite pass (see module docstring). ``plan`` returns
+    None when the current snapshot needs no rewrite — the pass is then
+    a skip."""
+    t0 = time.time()
+    ledger = PassLedger(table.root, pass_id)
+    if ledger.committed:
+        return PassResult(operation, pass_id, ledger.committed["snapshot_id"], 0, 0, 0, 0.0, skipped=True)
     last_err: Exception | None = None
     for attempt in range(max_replans + 1):
         prefix = f"a{attempt}-" if attempt else ""
-        planned = attempt_fn(attempt, prefix)
-        if isinstance(planned, PassResult):
-            return planned
-        added, removed, summary, finish = planned
+        snap = _current_snapshot(table)
+        p = plan(snap)
+        if p is None:
+            return PassResult(operation, pass_id, snap.snapshot_id, 0, 0, 0, time.time() - t0, skipped=True)
+        waves = functools.partial(_rewrite_files_in_waves, table, spark, ledger, task_prefix=prefix)
+        if p.rewrite is not None:
+            outputs = p.rewrite(p.files, waves)
+        else:
+            write = _scan_packed_writer(table, spark, target_bytes, transform, sort_col)
+            outputs = _outputs(waves(p.files, f"{operation}-{pass_id}", write=write))
+        # e.g. a file whose rows were all deleted writes back as a
+        # 0-row shell: never commit one
+        added = [a for a in outputs if a.rows > 0]
+        _drop_attempt_outputs(table, [a.path for a in outputs if a.rows == 0])
         try:
             new_snap = table.commit_with_retry(
-                operation, added=added, removed_paths=removed, summary=summary
+                operation,
+                added=added,
+                removed_paths=[f.path for f in p.whole + p.files],
+                summary={"pass_id": pass_id, **p.summary, "replans": attempt},
             )
         except StaleDeltaError as e:
             last_err = e
-            _drop_attempt_outputs(table, added, ledger, prefix)
+            _drop_attempt_outputs(table, [a.path for a in added], ledger, prefix)
             continue
-        return finish(new_snap)
+        details = {**p.details(added), "replans": attempt}
+        ledger.record_commit(new_snap.snapshot_id, details)
+        return PassResult(
+            operation,
+            pass_id,
+            new_snap.snapshot_id,
+            rewritten_files=len(p.files),
+            added_files=len(added),
+            rewritten_bytes=sum(f.bytes for f in p.files),
+            seconds=time.time() - t0,
+            details=details,
+        )
     raise last_err  # type: ignore[misc]
+
+
+# ---------------------------------------------------------------------------
+# B3 — compaction
+# ---------------------------------------------------------------------------
 
 
 def compact(
     table: Table,
     spark: SparkSession,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    concurrency: int = DEFAULT_CONCURRENCY,  # noqa: ARG001 — legacy, wave mode
     pass_id: str | None = None,
-    wave_files: int = DEFAULT_WAVE_FILES,
     small_ratio: float = 0.75,
     max_replans: int = 3,
 ) -> PassResult:
     """Rewrite small files into ~target-size files. No shuffle, no
     crypto: one Spark job per wave, scan packing forms the bins,
-    ciphertext is opaque payload (see ``_rewrite_files_in_waves``).
-    Only files under ``small_ratio × target`` are rewritten (a
-    near-target file is a rename with no benefit); a single leftover
-    small file is likewise left alone.
+    ciphertext is opaque payload. Only files under ``small_ratio ×
+    target`` are rewritten (a near-target file is a rename with no
+    benefit); a single leftover small file is likewise left alone.
 
-    Conflict re-planning: the commit runs through ``commit_with_retry``
-    (a pure version race with a disjoint winner — e.g. a streaming
-    append — re-applies the delta and succeeds). When the winner
-    REWROTE this pass's inputs (``StaleDeltaError`` — e.g. a racing
-    shred targeted the same files), retrying can never succeed: the
-    pass drops the attempt's orphaned outputs and RE-PLANS from the
-    fresh snapshot — re-selecting the surviving small files and
-    re-running the waves — up to ``max_replans`` times. Both racing
-    passes commit; rows are never lost or duplicated (the re-plan reads
-    the winner's files, so a shred's tombstones survive compaction)."""
-    t0 = time.time()
-    pass_id = pass_id or _new_pass_id("compact")
-    ledger = PassLedger(table.root, pass_id)
-    if ledger.committed:
-        return PassResult("compact", pass_id, ledger.committed["snapshot_id"], 0, 0, 0, 0.0, skipped=True)
+    A racing pass that rewrote this pass's inputs triggers a re-plan
+    that re-selects the surviving small files: both passes commit, and
+    rows are never lost or duplicated (the re-plan reads the winner's
+    files, so a shred's tombstones survive compaction)."""
 
-    def _attempt(attempt: int, prefix: str):
-        snap = table.snapshot()
-        small = [f for f in snap.files if f.bytes < target_file_bytes * small_ratio]
-        small.sort(key=lambda f: f.path)
-        if len(small) < 2:
-            return PassResult("compact", pass_id, snap.snapshot_id, 0, 0, 0, time.time() - t0, skipped=True)
-
-        results = _rewrite_files_in_waves(
-            table,
-            spark,
-            ledger,
-            small,
-            f"compact-{pass_id}",
-            target_bytes=target_file_bytes,
-            wave_files=wave_files,
-            task_prefix=prefix,
+    def plan(snap: Snapshot) -> _Plan | None:
+        small = sorted(
+            (f for f in snap.files if f.bytes < target_file_bytes * small_ratio),
+            key=lambda f: f.path,
         )
-        removed = [p for r in results for p in r["inputs"]]
-        added = [DataFile.from_json(d) for r in results for d in r["outputs"]]
+        if len(small) < 2:
+            return None
+        n_waves = -(-len(small) // DEFAULT_WAVE_FILES)
+        return _Plan(small, {"waves": n_waves}, lambda added: {"waves": n_waves})
 
-        def finish(new_snap):
-            ledger.record_commit(new_snap.snapshot_id, {"waves": len(results)})
-            return PassResult(
-                "compact",
-                pass_id,
-                new_snap.snapshot_id,
-                rewritten_files=len(removed),
-                added_files=len(added),
-                rewritten_bytes=sum(r["bytes_in"] for r in results),
-                seconds=time.time() - t0,
-                details={"waves": len(results), "replans": attempt},
-            )
-
-        summary = {"pass_id": pass_id, "waves": len(results), "replans": attempt}
-        return added, removed, summary, finish
-
-    return _run_with_replans(table, ledger, "compact", max_replans, _attempt)
+    return _rewrite_pass(
+        table, spark, "compact", pass_id or _new_pass_id("compact"), max_replans, plan,
+        target_file_bytes, sort_col=None,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -423,253 +475,179 @@ def cluster(
     rate, not the table size. The new files get their own key space
     (fresh sample boundaries); stats pruning is unaffected because
     predicates prune on the raw column min/max, not on zkey."""
-    t0 = time.time()
     pass_id = pass_id or _new_pass_id("zorder")
-    ledger = PassLedger(table.root, pass_id)
-    if ledger.committed:
-        return PassResult(curve, pass_id, ledger.committed["snapshot_id"], 0, 0, 0, 0.0, skipped=True)
+    layout = {"cluster_columns": list(columns), "curve": curve, "bits": bits}
 
-    def _attempt(attempt: int, prefix: str):
-        return _cluster_attempt(
-            table, spark, columns, curve, bits, target_file_bytes, pass_id,
-            sample_rows, incremental, boundaries_from_stats, merge_if_sorted,
-            ledger, t0, attempt, prefix,
-        )
+    def merge(files: list[DataFile], waves) -> list[DataFile]:
+        # Spark's scan packing cannot preserve file order (it sorts
+        # splits by size), so the merge uses the order-preserving group
+        # writer: consecutive packing + one pyarrow task per output
+        # file, stats in-task — zero shuffles, zero read-back
+        def pack(fs):
+            return pack_consecutive(fs, target_file_bytes)
 
-    return _run_with_replans(table, ledger, curve, max_replans, _attempt)
+        def write(wave, dir_tag):
+            rel_dir, _ = table.new_data_dir(dir_tag)
+            groups = [
+                (os.path.join(rel_dir, f"part-{i:05d}.parquet"), [f.path for f in p])
+                for i, p in enumerate(pack(wave))
+            ]
+            return rewrite_file_groups(
+                table.root, groups, spark, table.stats_columns(),
+                bloom_cols=table.bloom_columns(), sort_col="zkey",
+            )
 
+        return _outputs(waves(files, f"{curve}-merge-{pass_id}", write=write, pack=pack, task="merge-w{w:05d}"))
 
-def _cluster_attempt(
-    table, spark, columns, curve, bits, target_file_bytes, pass_id,
-    sample_rows, incremental, boundaries_from_stats, merge_if_sorted,
-    ledger, t0, attempt, prefix,
-):
-    """One re-plannable clustering attempt over the CURRENT snapshot
-    (the conflict re-planning protocol — see ``_run_with_replans``).
-    Returns a skip ``PassResult`` or the protocol's commit tuple."""
-    snap = table.snapshot()
-    in_files = snap.files
-    if incremental:
-        # a file is "already clustered" only if it has REAL zkey stats —
-        # an all-null zkey column (e.g. a compaction that packed
-        # pre-cluster appends after the schema gained zkey) must still
-        # be rewritten
-        in_files = [
-            f for f in in_files
-            if "zkey" not in f.stats or f.stats["zkey"][0] is None
-        ]
-    if not in_files:
-        return PassResult(curve, pass_id, snap.snapshot_id, 0, 0, 0, 0.0, skipped=True)
-    total_bytes = sum(f.bytes for f in in_files)
-    n_files = max(1, round(total_bytes / target_file_bytes))
-
-    # -- no-shuffle merge path (bucketed-by-zkey layout reuse, r3
-    # judge ask #9). If every input file carries real zkey stats and
-    # the files' [min,max] zkey ranges are pairwise non-overlapping
-    # (the exact layout a previous cluster() pass produced), the table
-    # IS already range-partitioned on the curve key: re-clustering —
-    # re-packing to a new target size, or after shred/compact preserved
-    # the order — needs NO range exchange. Read the files in zkey order
-    # with scan packing, restore order within each packed partition,
-    # write. Zero shuffles; every clustering invariant (global zkey
-    # order across files, tight per-file stats) is preserved by
-    # construction. Boundary-equal ranges (max[i] == min[i+1]) are
-    # fine: they come from the tiebreaker splitting mega-keys.
-    zstats = [f.stats.get("zkey") for f in in_files]
-    zgen = _cluster_provenance_matches(table, list(columns), curve, bits)
-    if (
-        merge_if_sorted
-        and len(in_files) > 1
-        and all(z and z[0] is not None and z[1] is not None for z in zstats)
-        and zgen is not None
-    ):
-        ordered = sorted(in_files, key=lambda f: (f.stats["zkey"][0], f.path))
-        if all(
-            ordered[i].stats["zkey"][1] <= ordered[i + 1].stats["zkey"][0]
-            for i in range(len(ordered) - 1)
-        ):
-            # Spark's scan packing cannot preserve file order (it
-            # sorts splits by size), so the merge uses the
-            # order-preserving group writer: consecutive packing +
-            # one pyarrow task per output file, stats in-task —
-            # zero shuffles, zero read-back. Groups run in WAVES of
-            # ``wave_files`` inputs (one job per wave, one ledger task
-            # each): resume granularity and the driver's in-flight
-            # path-list stay bounded at 10^6-file scale.
-            packs = pack_consecutive(ordered, target_file_bytes)
-            added, removed = [], []
-            wave_packs: list[list] = [[]]
-            for pack in packs:
-                if sum(len(p) for p in wave_packs[-1]) + len(pack) > DEFAULT_WAVE_FILES and wave_packs[-1]:
-                    wave_packs.append([])
-                wave_packs[-1].append(pack)
-            for w, wpacks in enumerate(wave_packs):
-                task_id = f"{prefix}merge-w{w:05d}"
-                prior = ledger.task_result(task_id)
-                if prior:
-                    added.extend(DataFile.from_json(d) for d in prior["outputs"])
-                    removed.extend(prior["inputs"])
-                    continue
-                ws = time.time()
-                rel_dir, _ = table.new_data_dir(f"{curve}-merge-{pass_id}-w{w:05d}")
-                groups = [
-                    (
-                        os.path.join(rel_dir, f"part-{i:05d}.parquet"),
-                        [f.path for f in pack],
+    def shuffle(files: list[DataFile], waves, n_files: int) -> list[DataFile]:
+        def write(wave, dir_tag):
+            df = table.apply_schema_ops(
+                table.reader(spark).parquet(*[os.path.join(table.root, f.path) for f in wave])
+            )
+            # boundaries from MANIFEST stats when every input file
+            # carries them — zero Spark jobs (the sample job was this
+            # pass's parallelism-independent fixed cost); sample only
+            # as fallback
+            boundaries = (
+                column_boundaries_from_stats(wave, list(columns), bits=bits)
+                if boundaries_from_stats
+                else None
+            )
+            if boundaries is None:
+                # bound the sampling scan to <=32 evenly spaced input
+                # files: boundaries only need approximate quantiles, and
+                # an even stride over the file list is representative
+                # whether the table is unclustered (every file spans
+                # everything) or partially clustered (stride covers the
+                # key space). Keeps the fallback's fixed cost flat as
+                # the file count grows.
+                if len(wave) > 32:
+                    stride = len(wave) / 32.0
+                    subset = [wave[int(i * stride)] for i in range(32)]
+                    sample_src = table.apply_schema_ops(
+                        table.reader(spark).parquet(
+                            *[os.path.join(table.root, f.path) for f in subset]
+                        )
                     )
-                    for i, pack in enumerate(wpacks)
-                ]
-                wave_added = rewrite_file_groups(
-                    table.root,
-                    groups,
-                    spark,
-                    table.stats_columns(),
-                    bloom_cols=table.bloom_columns(),
-                    sort_col="zkey",
+                    subset_rows = sum(f.rows for f in subset)
+                else:
+                    sample_src, subset_rows = df, sum(f.rows for f in wave)
+                boundaries = column_boundaries(
+                    sample_src,
+                    list(columns),
+                    bits=bits,
+                    sample_rows=sample_rows,
+                    total_rows=subset_rows,  # manifest knows; no count job
                 )
-                wave_removed = [f.path for pack in wpacks for f in pack]
-                ledger.record_task(
-                    task_id,
-                    {
-                        "inputs": wave_removed,
-                        "outputs": [a.to_json() for a in wave_added],
-                        "rows": sum(a.rows for a in wave_added),
-                        "bytes_in": sum(f.bytes for pack in wpacks for f in pack),
-                    },
-                    metrics={"seconds": time.time() - ws, "n_groups": len(groups)},
-                )
-                added.extend(wave_added)
-                removed.extend(wave_removed)
-            summary = {
-                "pass_id": pass_id,
-                "cluster_columns": list(columns),
-                "curve": curve,
-                "bits": bits,
-                "mode": "merge",
+            bc = spark.sparkContext.broadcast(boundaries)
+            keyed = with_cluster_key(df, columns, bits=bits, curve=curve, boundaries=boundaries, broadcast=bc)
+            # NO persist of the keyed frame. repartitionByRange runs an
+            # internal sampling job over its input, so the zkey UDF
+            # executes twice — but the sampling job only evaluates the
+            # partition-key expressions, so Catalyst prunes its scan to
+            # the narrow cluster-key columns (never the fat payload
+            # column). Persisting the whole keyed table serialized it
+            # through one shared disk three times and capped the pass's
+            # core-scaling at the disk, not the CPU: recomputing a
+            # cheap Arrow UDF over pruned columns scales with cores; a
+            # single disk does not.
+            tiebreak = "commit" if "commit" in df.columns else columns[-1]
+            clustered = keyed.repartitionByRange(n_files, F.col("zkey"), F.col(tiebreak)).sortWithinPartitions("zkey")
+            return table.write_files(clustered, spark, tag=dir_tag)
+
+        # one range exchange over every input: a single wave
+        return _outputs(waves(files, f"{curve}-{pass_id}", write=write, pack=lambda fs: [fs], task="rewrite"))
+
+    def plan(snap: Snapshot) -> _Plan | None:
+        in_files = snap.files
+        if incremental:
+            # a file is "already clustered" only if it has REAL zkey
+            # stats — an all-null zkey column (e.g. a compaction that
+            # packed pre-cluster appends after the schema gained zkey)
+            # must still be rewritten
+            in_files = [
+                f for f in in_files
+                if "zkey" not in f.stats or f.stats["zkey"][0] is None
+            ]
+        if not in_files:
+            return None
+
+        # -- no-shuffle merge path (bucketed-by-zkey layout reuse). If
+        # every input file carries real zkey stats and the files'
+        # [min,max] zkey ranges are pairwise non-overlapping (the exact
+        # layout a previous cluster() pass produced), the table IS
+        # already range-partitioned on the curve key: re-clustering —
+        # re-packing to a new target size, or after shred/compact
+        # preserved the order — needs NO range exchange. Every
+        # clustering invariant (global zkey order across files, tight
+        # per-file stats) is preserved by construction. Boundary-equal
+        # ranges (max[i] == min[i+1]) are fine: they come from the
+        # tiebreaker splitting mega-keys.
+        zstats = [f.stats.get("zkey") for f in in_files]
+        zgen = _cluster_provenance_matches(table, list(columns), curve, bits)
+        if (
+            merge_if_sorted
+            and len(in_files) > 1
+            and all(z and z[0] is not None and z[1] is not None for z in zstats)
+            and zgen is not None
+        ):
+            ordered = sorted(in_files, key=lambda f: (f.stats["zkey"][0], f.path))
+            if all(
+                ordered[i].stats["zkey"][1] <= ordered[i + 1].stats["zkey"][0]
+                for i in range(len(ordered) - 1)
+            ):
                 # a merge re-packs existing keys: the boundary
                 # generation is inherited unchanged
-                "zkey_gen": zgen,
-                "replans": attempt,
-            }
-
-            def finish_merge(new_snap):
-                ledger.record_commit(new_snap.snapshot_id)
-                return PassResult(
-                    curve,
-                    pass_id,
-                    new_snap.snapshot_id,
-                    rewritten_files=len(in_files),
-                    added_files=len(added),
-                    rewritten_bytes=total_bytes,
-                    seconds=time.time() - t0,
-                    details={"mode": "merge-no-shuffle", "n_files": len(added), "replans": attempt},
+                return _Plan(
+                    ordered,
+                    {**layout, "mode": "merge", "zkey_gen": zgen},
+                    lambda added: {"mode": "merge-no-shuffle", "n_files": len(added)},
+                    rewrite=merge,
                 )
 
-            return added, removed, summary, finish_merge
-
-    task_id = f"{prefix}rewrite"
-    prior = ledger.task_result(task_id)
-    if prior:
-        added = [DataFile.from_json(d) for d in prior["outputs"]]
-    else:
-        df = table.apply_schema_ops(
-            table.reader(spark).parquet(*[os.path.join(table.root, f.path) for f in in_files])
-        )
-        # boundaries from MANIFEST stats when every input file carries
-        # them — zero Spark jobs (the sample job was this pass's
-        # parallelism-independent fixed cost); sample only as fallback
-        boundaries = (
-            column_boundaries_from_stats(in_files, list(columns), bits=bits)
-            if boundaries_from_stats
-            else None
-        )
-        if boundaries is None:
-            # bound the sampling scan to <=32 evenly spaced input files:
-            # boundaries only need approximate quantiles, and an even
-            # stride over the file list is representative whether the
-            # table is unclustered (every file spans everything) or
-            # partially clustered (stride covers the key space). Keeps
-            # the fallback's fixed cost flat as the file count grows.
-            if len(in_files) > 32:
-                stride = len(in_files) / 32.0
-                subset = [in_files[int(i * stride)] for i in range(32)]
-                sample_src = table.apply_schema_ops(
-                    table.reader(spark).parquet(
-                        *[os.path.join(table.root, f.path) for f in subset]
-                    )
-                )
-                subset_rows = sum(f.rows for f in subset)
-            else:
-                sample_src, subset_rows = df, sum(f.rows for f in in_files)
-            boundaries = column_boundaries(
-                sample_src,
-                list(columns),
-                bits=bits,
-                sample_rows=sample_rows,
-                total_rows=subset_rows,  # manifest knows; no count job
-            )
-        bc = spark.sparkContext.broadcast(boundaries)
-        keyed = with_cluster_key(df, columns, bits=bits, curve=curve, boundaries=boundaries, broadcast=bc)
-        # NO persist of the keyed frame. repartitionByRange runs an
-        # internal sampling job over its input, so the zkey UDF
-        # executes twice — but the sampling job only evaluates the
-        # partition-key expressions, so Catalyst prunes its scan to the
-        # narrow cluster-key columns (never the fat payload column).
-        # Persisting the whole keyed table (round 1 did, DISK_ONLY)
-        # serialized the entire table through one shared disk three
-        # times and capped the pass's core-scaling at the disk, not the
-        # CPU: recomputing a cheap Arrow UDF over pruned columns scales
-        # with cores; a single disk does not.
-        tiebreak = "commit" if "commit" in df.columns else columns[-1]
-        clustered = keyed.repartitionByRange(n_files, F.col("zkey"), F.col(tiebreak)).sortWithinPartitions("zkey")
-        added = table.write_files(clustered, spark, tag=f"{curve}-{pass_id}")
-        ledger.record_task(
-            task_id,
-            {
-                "inputs": [f.path for f in in_files],
-                "outputs": [a.to_json() for a in added],
-                "rows": sum(a.rows for a in added),
-                "bytes_in": total_bytes,
-            },
-            metrics={"seconds": time.time() - t0, "n_files": n_files},
-        )
-    # boundary-generation id: a FULL clustering (every live file went
-    # through one set of boundaries) mints a new generation = pass_id;
-    # an incremental pass gives its fresh files their OWN key space, so
-    # the table now mixes generations and the merge path must stay
-    # closed (zkey_gen omitted → _cluster_provenance_matches rejects)
-    # until the next full clustering re-unifies it.
-    is_full = len(in_files) == len(snap.files)
-    summ = {
-        "pass_id": pass_id,
-        "cluster_columns": list(columns),
-        "curve": curve,
-        "bits": bits,
-        "incremental": incremental,
-        "replans": attempt,
-    }
-    if is_full:
-        summ["zkey_gen"] = pass_id
-
-    def finish_rewrite(new_snap):
-        ledger.record_commit(new_snap.snapshot_id)
-        return PassResult(
-            curve,
-            pass_id,
-            new_snap.snapshot_id,
-            rewritten_files=len(in_files),
-            added_files=len(added),
-            rewritten_bytes=total_bytes,
-            seconds=time.time() - t0,
-            details={"n_files": n_files, "incremental": incremental, "replans": attempt},
+        n_files = max(1, round(sum(f.bytes for f in in_files) / target_file_bytes))
+        summary = {**layout, "incremental": incremental}
+        # boundary-generation id: a FULL clustering (every live file
+        # went through one set of boundaries) mints a new generation =
+        # pass_id; an incremental pass gives its fresh files their OWN
+        # key space, so the table now mixes generations and the merge
+        # path must stay closed (zkey_gen omitted →
+        # _cluster_provenance_matches rejects) until the next full
+        # clustering re-unifies it.
+        if len(in_files) == len(snap.files):
+            summary["zkey_gen"] = pass_id
+        return _Plan(
+            in_files,
+            summary,
+            lambda added: {"n_files": n_files, "incremental": incremental},
+            rewrite=functools.partial(shuffle, n_files=n_files),
         )
 
-    return added, [f.path for f in in_files], summ, finish_rewrite
+    return _rewrite_pass(table, spark, curve, pass_id, max_replans, plan, target_file_bytes)
 
 
 # ---------------------------------------------------------------------------
 # B8 — MERGE INTO crypto-shred erasure
 # ---------------------------------------------------------------------------
+
+
+def _targeted(snap: Snapshot, preds) -> list[DataFile]:
+    """Files whose stats/blooms may hold a row matching every predicate,
+    in path order."""
+    return sorted(
+        (f for f in snap.files if all(p.may_match(f) for p in preds)),
+        key=lambda f: f.path,
+    )
+
+
+def _targeted_plan(snap: Snapshot, preds, summary: dict) -> _Plan | None:
+    """The plan of a pass that rewrites every targeted file (shred,
+    update_where, reencrypt), or None when no file is targeted."""
+    affected = _targeted(snap, preds)
+    if not affected:
+        return None
+    counts = {"affected_files": len(affected), "total_files": len(snap.files)}
+    return _Plan(affected, {**summary, "affected_files": len(affected)}, lambda added: counts)
 
 
 def shred(
@@ -678,39 +656,28 @@ def shred(
     subjects,
     subject_column: str = "repo",
     envelope_columns=("content_enc",),
-    concurrency: int = DEFAULT_CONCURRENCY,  # noqa: ARG001 — legacy, wave mode
     pass_id: str | None = None,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    wave_files: int = DEFAULT_WAVE_FILES,
     max_replans: int = 3,
 ) -> PassResult:
     """MERGE-INTO-style erasure: rewrite **only** the data files whose
     stats may contain a forgotten subject, tombstoning that subject's
     rows (envelope → NULL, shredded → true). All other files are
-    untouched manifest entries. Affected files rewrite in scan-packed
-    waves (``_rewrite_files_in_waves``) — one Spark job per wave,
-    ~target-size outputs, oversized inputs split naturally. The caller
-    must already have FORGOTTEN the subject's key
-    (``KeyRegistry.forget``) — key deletion is what makes the
-    ciphertext unrecoverable; this pass removes the bytes.
+    untouched manifest entries. Every affected file is rewritten
+    regardless of size: scan packing merges the small ones toward
+    target size and SPLITS oversized ones (parquet row groups are
+    splittable) into several right-sized outputs
+    (tests/test_shred_oversized.py). The caller must already have
+    FORGOTTEN the subject's key (``KeyRegistry.forget``) — key deletion
+    is what makes the ciphertext unrecoverable; this pass removes the
+    bytes.
 
-    Conflict re-planning (same protocol as ``compact``): a disjoint
-    version race re-applies through ``commit_with_retry``; a winner
-    that rewrote this pass's inputs (``StaleDeltaError`` — e.g. a
-    racing compaction packed the victim's files) triggers a re-plan
-    from the fresh snapshot. Re-targeting is CORRECTNESS here, not just
-    liveness: the victim's rows now live in the winner's output files,
-    and only a re-planned stats/bloom scan finds them all."""
-    t0 = time.time()
+    Re-targeting on a re-plan is CORRECTNESS here, not just liveness:
+    after a racing compaction the victim's rows live in the winner's
+    output files, and only a re-planned stats/bloom scan finds them
+    all."""
     subjects = sorted(set(subjects))
-    pass_id = pass_id or _new_pass_id("shred")
-    ledger = PassLedger(table.root, pass_id)
-    if ledger.committed:
-        return PassResult("shred", pass_id, ledger.committed["snapshot_id"], 0, 0, 0, 0.0, skipped=True)
-    if not subjects:
-        return PassResult("shred", pass_id, table.current_snapshot_id(), 0, 0, 0, 0.0, skipped=True)
-
-    pred = ColumnPredicate(subject_column, "in", values=tuple(subjects))
+    preds = [ColumnPredicate(subject_column, "in", values=tuple(subjects))]
     forget_df = spark.createDataFrame(
         [(s,) for s in subjects], f"{subject_column} string"
     ).withColumn("__forget", F.lit(True))
@@ -731,59 +698,13 @@ def shred(
             )
         return out.drop("__forget").select(*df.columns)
 
-    def _attempt(attempt: int, prefix: str):
-        snap = table.snapshot()
-        affected = [f for f in snap.files if pred.may_match(f)]
-        if not affected:
-            return PassResult("shred", pass_id, snap.snapshot_id, 0, 0, 0, time.time() - t0, skipped=True)
+    def plan(snap: Snapshot) -> _Plan | None:
+        return _targeted_plan(snap, preds, {"subjects": subjects}) if subjects else None
 
-        # every affected file is rewritten regardless of size: scan
-        # packing merges the small ones toward target size and SPLITS
-        # oversized ones (parquet row groups are splittable) into
-        # several right-sized outputs (tests/test_shred_oversized.py).
-        # The tombstone projection is a broadcast join (narrow), and
-        # the per-partition zkey sort restores key order when clustered.
-        results = _rewrite_files_in_waves(
-            table,
-            spark,
-            ledger,
-            sorted(affected, key=lambda f: f.path),
-            f"shred-{pass_id}",
-            target_bytes=target_file_bytes,
-            transform=tombstone,
-            sort_col="zkey",
-            wave_files=wave_files,
-            task_prefix=prefix,
-        )
-        removed = [p for r in results for p in r["inputs"]]
-        added = [DataFile.from_json(d) for r in results for d in r["outputs"]]
-
-        def finish(new_snap):
-            ledger.record_commit(new_snap.snapshot_id)
-            return PassResult(
-                "shred",
-                pass_id,
-                new_snap.snapshot_id,
-                rewritten_files=len(affected),
-                added_files=len(added),
-                rewritten_bytes=sum(f.bytes for f in affected),
-                seconds=time.time() - t0,
-                details={
-                    "affected_files": len(affected),
-                    "total_files": len(snap.files),
-                    "replans": attempt,
-                },
-            )
-
-        summary = {
-            "pass_id": pass_id,
-            "subjects": subjects,
-            "affected_files": len(affected),
-            "replans": attempt,
-        }
-        return added, removed, summary, finish
-
-    return _run_with_replans(table, ledger, "shred", max_replans, _attempt)
+    return _rewrite_pass(
+        table, spark, "shred", pass_id or _new_pass_id("shred"), max_replans, plan,
+        target_file_bytes, transform=tombstone,
+    )
 
 
 def merge_into(
@@ -795,7 +716,6 @@ def merge_into(
     when_not_matched: str = "insert",
     pass_id: str | None = None,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    wave_files: int = DEFAULT_WAVE_FILES,
     max_replans: int = 3,
     broadcast_key_cap: int = 500_000,
     matched_condition=None,
@@ -836,14 +756,9 @@ def merge_into(
     (Spark/AQE plans the join strategy and handles skew). Inserts are
     found with an anti-join against the AFFECTED files' keys only —
     sound because a file the pruner skipped provably contains no
-    source key.
-
-    Conflict re-planning is shred's protocol: a concurrent winner that
-    rewrote this pass's inputs (``StaleDeltaError``) drops the
-    attempt's orphaned outputs and re-plans from the fresh snapshot —
-    re-pruning is correctness, not liveness, because matched rows may
-    now live in the winner's outputs."""
-    t0 = time.time()
+    source key. Re-pruning on a re-plan is correctness, as in
+    ``shred``: matched rows may now live in a racing winner's
+    outputs."""
     keys = [on] if isinstance(on, str) else list(on)
     if when_matched not in ("update", "delete"):
         raise Pi2SparkError(f"when_matched must be update|delete, got {when_matched!r}")
@@ -852,63 +767,57 @@ def merge_into(
             f"when_not_matched must be insert|skip, got {when_not_matched!r}"
         )
     pass_id = pass_id or _new_pass_id("merge")
-    ledger = PassLedger(table.root, pass_id)
-    if ledger.committed:
-        return PassResult(
-            "merge", pass_id, ledger.committed["snapshot_id"], 0, 0, 0, 0.0, skipped=True
-        )
 
-    # one agg job: source cardinality + key-uniqueness + per-key range
-    agg_exprs = [
-        F.count(F.lit(1)).alias("__n"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("__nd"),
-    ]
-    for k in keys:
-        agg_exprs += [F.min(k).alias(f"__mn_{k}"), F.max(k).alias(f"__mx_{k}")]
-    stats = source.agg(*agg_exprs).first()
-    n_src = stats["__n"]
-    if n_src == 0:
-        return PassResult(
-            "merge", pass_id, table.current_snapshot_id(), 0, 0, 0,
-            time.time() - t0, skipped=True,
-        )
-    if stats["__nd"] != n_src:
-        raise AmbiguousMergeSourceError(
-            f"merge source has {n_src - stats['__nd']} duplicate or NULL key rows on {keys}"
-        )
-
-    # near-exact pruning path: collect the key set when it is small —
-    # the limit bounds the driver transfer even against a huge source
-    key_rows = None
-    if n_src <= broadcast_key_cap and len(keys) == 1:
-        key_rows = [
-            r[0]
-            for r in source.select(keys[0])
-            .distinct()
-            .limit(broadcast_key_cap + 1)
-            .collect()
+    @functools.cache
+    def analyse():
+        """One agg job: source cardinality + key-uniqueness + per-key
+        range; then the pruning predicates. Runs once, on the first
+        attempt (after the ledger's committed-skip)."""
+        agg_exprs = [
+            F.count(F.lit(1)).alias("__n"),
+            F.count_distinct(*[F.col(k) for k in keys]).alias("__nd"),
         ]
-        if len(key_rows) > broadcast_key_cap:  # source grew under us
-            key_rows = None
-    if key_rows is not None:
-        preds = [ColumnPredicate(keys[0], "in", values=tuple(key_rows))]
-    else:
+        for k in keys:
+            agg_exprs += [F.min(k).alias(f"__mn_{k}"), F.max(k).alias(f"__mx_{k}")]
+        stats = source.agg(*agg_exprs).first()
+        n_src = stats["__n"]
+        if n_src == 0:
+            return 0, [], False
+        if stats["__nd"] != n_src:
+            raise AmbiguousMergeSourceError(
+                f"merge source has {n_src - stats['__nd']} duplicate or NULL key rows on {keys}"
+            )
+        if assignments is not None and when_matched != "update":
+            raise Pi2SparkError("merge assignments require when_matched='update'")
+        # near-exact pruning path: collect the key set when it is small
+        # — the limit bounds the driver transfer even against a huge
+        # source
+        key_rows = None
+        if n_src <= broadcast_key_cap and len(keys) == 1:
+            key_rows = [
+                r[0]
+                for r in source.select(keys[0])
+                .distinct()
+                .limit(broadcast_key_cap + 1)
+                .collect()
+            ]
+            if len(key_rows) > broadcast_key_cap:  # source grew under us
+                key_rows = None
+        if key_rows is not None:
+            return n_src, [ColumnPredicate(keys[0], "in", values=tuple(key_rows))], True
         preds = [
             ColumnPredicate(k, "between", value=(stats[f"__mn_{k}"], stats[f"__mx_{k}"]))
             for k in keys
         ]
+        return n_src, preds, False
 
     payload_src_cols = [c for c in source.columns if c not in keys]
     src_named = source.select(
         *keys, *[F.col(c).alias(f"__src_{c}") for c in payload_src_cols]
     ).withColumn("__m", F.lit(True))
-    broadcastable = key_rows is not None
-
-    if assignments is not None and when_matched != "update":
-        raise Pi2SparkError("merge assignments require when_matched='update'")
 
     def combine(df: DataFrame) -> DataFrame:
-        right = F.broadcast(src_named) if broadcastable else src_named
+        right = F.broadcast(src_named) if analyse()[2] else src_named
         out = df.join(right, on=keys, how="left")
         # user-facing source namespace for conditions/assignments
         for c in payload_src_cols:
@@ -945,57 +854,46 @@ def merge_into(
                 )
         return out.select(*df.columns)
 
-    def _read_affected(affected):
+    def _read(files):
         return table.apply_schema_ops(
-            table.reader(spark).parquet(
-                *[os.path.join(table.root, f.path) for f in affected]
-            )
+            table.reader(spark).parquet(*[os.path.join(table.root, f.path) for f in files])
         )
 
-    def _attempt(attempt: int, prefix: str):
-        try:
-            snap = table.snapshot()
-        except Pi2SparkError:
-            snap = None  # merging into an empty table: pure insert
-        tgt_files = snap.files if snap is not None else []
-        affected = [f for f in tgt_files if all(p.may_match(f) for p in preds)]
+    def plan(snap: Snapshot) -> _Plan | None:
+        n_src, preds, broadcastable = analyse()
+        if n_src == 0:
+            return None
+        affected = _targeted(snap, preds)
 
-        if affected and broadcastable:
-            results = _rewrite_files_in_waves(
-                table, spark, ledger,
-                sorted(affected, key=lambda f: f.path),
-                f"merge-{pass_id}", target_bytes=target_file_bytes,
-                transform=combine, sort_col="zkey", wave_files=wave_files,
-                task_prefix=prefix,
-            )
-            removed = [p for r in results for p in r["inputs"]]
-            added = [DataFile.from_json(d) for r in results for d in r["outputs"]]
-        elif affected:
-            # big-source path: one shuffled rewrite job over the
-            # affected files, sized to ~target-file outputs
-            merged = combine(_read_affected(affected))
-            n_out = max(1, int(sum(f.bytes for f in affected) / target_file_bytes))
-            if "zkey" in merged.columns:
-                merged = merged.repartitionByRange(n_out, "zkey").sortWithinPartitions("zkey")
+        def rewrite(files: list[DataFile], waves) -> list[DataFile]:
+            if not files:
+                added = []
+            elif broadcastable:
+                write = _scan_packed_writer(table, spark, target_file_bytes, combine, "zkey")
+                added = _outputs(waves(files, f"merge-{pass_id}", write=write))
             else:
-                merged = merged.repartition(n_out)
-            added = table.write_files(merged, spark, tag=f"merge-{pass_id}-{prefix}big")
-            removed = [f.path for f in affected]
-        else:
-            removed, added = [], []
+                # big-source path: one shuffled rewrite job over the
+                # affected files, sized to ~target-file outputs
+                def write(wave, dir_tag):
+                    merged = combine(_read(wave))
+                    n_out = max(1, int(sum(f.bytes for f in wave) / target_file_bytes))
+                    if "zkey" in merged.columns:
+                        merged = merged.repartitionByRange(n_out, "zkey").sortWithinPartitions("zkey")
+                    else:
+                        merged = merged.repartition(n_out)
+                    return table.write_files(merged, spark, tag=dir_tag)
 
-        if when_not_matched == "insert":
-            if affected:
-                inserts_src = source.join(
-                    _read_affected(affected).select(*keys), on=keys, how="left_anti"
+                added = _outputs(
+                    waves(files, f"merge-{pass_id}-big", write=write, pack=lambda fs: [fs], task="rewrite")
                 )
+            if when_not_matched != "insert":
+                return added
+            if files:
+                inserts_src = source.join(_read(files).select(*keys), on=keys, how="left_anti")
             else:
                 inserts_src = source
             # project onto the table's logical schema: absent columns NULL
-            if tgt_files:
-                tgt_schema = table.scan(spark).limit(0).schema
-            else:
-                tgt_schema = source.schema
+            tgt_schema = table.scan(spark).limit(0).schema if snap.files else source.schema
             sel = []
             for fld in tgt_schema:
                 if fld.name in inserts_src.columns:
@@ -1004,41 +902,23 @@ def merge_into(
                     sel.append(F.lit(None).cast(fld.dataType).alias(fld.name))
             # output sizing from the table's own bytes/row (source row
             # width is unknown until written); bounded either way
-            if tgt_files:
-                bpr = sum(f.bytes for f in tgt_files) / max(1, sum(f.rows for f in tgt_files))
+            if snap.files:
+                bpr = sum(f.bytes for f in snap.files) / max(1, sum(f.rows for f in snap.files))
             else:
                 bpr = 256.0
             n_ins = max(1, min(64, int(n_src * bpr / target_file_bytes) + 1))
-            ins_added = table.write_files(
-                inserts_src.select(*sel).repartition(n_ins),
-                spark,
-                tag=f"merge-{pass_id}-{prefix}ins",
-            )
-            for a in ins_added:  # an all-matched source → empty outputs
-                if a.rows == 0:
-                    try:
-                        os.remove(os.path.join(table.root, a.path))
-                    except OSError:
-                        pass
-            added = added + [a for a in ins_added if a.rows > 0]
-
-        def finish(new_snap):
-            ledger.record_commit(new_snap.snapshot_id)
-            return PassResult(
-                "merge", pass_id, new_snap.snapshot_id,
-                rewritten_files=len(affected), added_files=len(added),
-                rewritten_bytes=sum(f.bytes for f in affected),
-                seconds=time.time() - t0,
-                details={
-                    "affected_files": len(affected),
-                    "total_files": len(tgt_files),
-                    "broadcast_path": broadcastable,
-                    "replans": attempt,
-                },
+            # an all-matched source writes only 0-row files, which the
+            # driver drops
+            return added + table.write_files(
+                inserts_src.select(*sel).repartition(n_ins), spark, tag=f"merge-{pass_id}-ins"
             )
 
+        counts = {
+            "affected_files": len(affected),
+            "total_files": len(snap.files),
+            "broadcast_path": broadcastable,
+        }
         summary = {
-            "pass_id": pass_id,
             "on": keys,
             "when_matched": when_matched,
             "when_not_matched": when_not_matched,
@@ -1046,11 +926,10 @@ def merge_into(
             "custom_assignments": sorted(assignments) if assignments else [],
             "n_source_rows": int(n_src),
             "affected_files": len(affected),
-            "replans": attempt,
         }
-        return added, removed, summary, finish
+        return _Plan(affected, summary, lambda added: counts, rewrite=rewrite)
 
-    return _run_with_replans(table, ledger, "merge", max_replans, _attempt)
+    return _rewrite_pass(table, spark, "merge", pass_id, max_replans, plan, target_file_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -1138,7 +1017,6 @@ def delete_where(
     extra_condition=None,
     pass_id: str | None = None,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    wave_files: int = DEFAULT_WAVE_FILES,
     max_replans: int = 3,
 ) -> PassResult:
     """``DELETE FROM table WHERE ...`` as a copy-on-write maintenance
@@ -1160,30 +1038,19 @@ def delete_where(
         keeping only non-matching rows; outputs that come back empty
         are discarded rather than committed as 0-row files.
 
-    Conflict re-planning and ledger resume are the shared rewrite
-    protocol (``_run_with_replans``); like the other passes, the
-    rewrite is crypto-opaque (envelope bytes move untouched)."""
-    t0 = time.time()
+    Like the other passes, the rewrite is crypto-opaque (envelope bytes
+    move untouched)."""
     preds = list(predicates)
     cond = _where_expr(preds, extra_condition)
-    pass_id = pass_id or _new_pass_id("delete")
-    ledger = PassLedger(table.root, pass_id)
-    if ledger.committed:
-        return PassResult(
-            "delete", pass_id, ledger.committed["snapshot_id"], 0, 0, 0, 0.0, skipped=True
-        )
 
     def keep(df: DataFrame) -> DataFrame:
         # NULL-safe: rows where cond is NULL did not match -> kept
         return df.filter(~F.coalesce(cond, F.lit(False)))
 
-    def _attempt(attempt: int, prefix: str):
-        snap = table.snapshot()
-        affected = [f for f in snap.files if all(p.may_match(f) for p in preds)]
+    def plan(snap: Snapshot) -> _Plan | None:
+        affected = _targeted(snap, preds)
         if not affected:
-            return PassResult(
-                "delete", pass_id, snap.snapshot_id, 0, 0, 0, time.time() - t0, skipped=True
-            )
+            return None
         whole = (
             [f for f in affected if all(_stats_prove_all_match(p, f) for p in preds)]
             if extra_condition is None and preds
@@ -1192,72 +1059,31 @@ def delete_where(
         whole_set = {f.path for f in whole}
         rewrite = [f for f in affected if f.path not in whole_set]
 
-        added: list[DataFile] = []
-        removed = [f.path for f in whole]
-        if rewrite:
-            results = _rewrite_files_in_waves(
-                table,
-                spark,
-                ledger,
-                sorted(rewrite, key=lambda f: f.path),
-                f"delete-{pass_id}",
-                target_bytes=target_file_bytes,
-                transform=keep,
-                sort_col="zkey",
-                wave_files=wave_files,
-                task_prefix=prefix,
-            )
-            removed += [p for r in results for p in r["inputs"]]
-            outs = [DataFile.from_json(d) for r in results for d in r["outputs"]]
-            # a file whose rows all matched writes back empty (or as a
-            # 0-row parquet shell) — drop shells from the commit; the
-            # physical files are removed best-effort, orphan sweep
-            # reclaims any survivor
-            for a in outs:
-                if a.rows == 0:
-                    try:
-                        os.remove(os.path.join(table.root, a.path))
-                    except OSError:
-                        pass
-                else:
-                    added.append(a)
-
-        def finish(new_snap):
-            ledger.record_commit(new_snap.snapshot_id)
-            return PassResult(
-                "delete",
-                pass_id,
-                new_snap.snapshot_id,
-                rewritten_files=len(rewrite),
-                added_files=len(added),
-                rewritten_bytes=sum(f.bytes for f in rewrite),
-                seconds=time.time() - t0,
-                details={
-                    "affected_files": len(affected),
-                    "whole_file_deletes": len(whole),
-                    "total_files": len(snap.files),
-                    # every affected row either survives into `added`
-                    # or was deleted (whole-file inputs contribute all
-                    # their rows — nothing of theirs is in `added`)
-                    "deleted_rows": sum(f.rows for f in affected)
-                    - sum(a.rows for a in added),
-                    "replans": attempt,
-                },
-            )
+        def details(added):
+            return {
+                "affected_files": len(affected),
+                "whole_file_deletes": len(whole),
+                "total_files": len(snap.files),
+                # every affected row either survives into `added` or
+                # was deleted (whole-file inputs contribute all their
+                # rows — nothing of theirs is in `added`)
+                "deleted_rows": sum(f.rows for f in affected) - sum(a.rows for a in added),
+            }
 
         summary = {
-            "pass_id": pass_id,
             "predicates": [
                 {"column": p.column, "op": p.op, "value": p.value, "values": list(p.values)}
                 for p in preds
             ],
             "affected_files": len(affected),
             "whole_file_deletes": len(whole),
-            "replans": attempt,
         }
-        return added, removed, summary, finish
+        return _Plan(rewrite, summary, details, whole=whole)
 
-    return _run_with_replans(table, ledger, "delete", max_replans, _attempt)
+    return _rewrite_pass(
+        table, spark, "delete", pass_id or _new_pass_id("delete"), max_replans, plan,
+        target_file_bytes, transform=keep,
+    )
 
 
 def update_where(
@@ -1268,7 +1094,6 @@ def update_where(
     extra_condition=None,
     pass_id: str | None = None,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    wave_files: int = DEFAULT_WAVE_FILES,
     max_replans: int = 3,
 ) -> PassResult:
     """``UPDATE table SET col = expr WHERE ...`` as a copy-on-write
@@ -1284,7 +1109,6 @@ def update_where(
     instead. The subject column is likewise refused (rebinding rows to
     a different subject must re-seal the envelope under the new
     subject's key — reencrypt's job, not a projection's)."""
-    t0 = time.time()
     preds = list(predicates)
     cond = _where_expr(preds, extra_condition)
     if not assignments:
@@ -1318,12 +1142,6 @@ def update_where(
             f"update_where cannot assign protected column(s) {bad}: PII moves "
             "through decrypt/encrypt_table or reencrypt, never a plain projection"
         )
-    pass_id = pass_id or _new_pass_id("update")
-    ledger = PassLedger(table.root, pass_id)
-    if ledger.committed:
-        return PassResult(
-            "update", pass_id, ledger.committed["snapshot_id"], 0, 0, 0, 0.0, skipped=True
-        )
 
     def apply(df: DataFrame) -> DataFrame:
         hit = F.coalesce(cond, F.lit(False))
@@ -1341,54 +1159,13 @@ def update_where(
             )
         return out.select(*df.columns)
 
-    def _attempt(attempt: int, prefix: str):
-        snap = table.snapshot()
-        affected = [f for f in snap.files if all(p.may_match(f) for p in preds)]
-        if not affected:
-            return PassResult(
-                "update", pass_id, snap.snapshot_id, 0, 0, 0, time.time() - t0, skipped=True
-            )
-        results = _rewrite_files_in_waves(
-            table,
-            spark,
-            ledger,
-            sorted(affected, key=lambda f: f.path),
-            f"update-{pass_id}",
-            target_bytes=target_file_bytes,
-            transform=apply,
-            sort_col="zkey",
-            wave_files=wave_files,
-            task_prefix=prefix,
-        )
-        removed = [p for r in results for p in r["inputs"]]
-        added = [DataFile.from_json(d) for r in results for d in r["outputs"]]
+    def plan(snap: Snapshot) -> _Plan | None:
+        return _targeted_plan(snap, preds, {"assignments": sorted(assignments)})
 
-        def finish(new_snap):
-            ledger.record_commit(new_snap.snapshot_id)
-            return PassResult(
-                "update",
-                pass_id,
-                new_snap.snapshot_id,
-                rewritten_files=len(affected),
-                added_files=len(added),
-                rewritten_bytes=sum(f.bytes for f in affected),
-                seconds=time.time() - t0,
-                details={
-                    "affected_files": len(affected),
-                    "total_files": len(snap.files),
-                    "replans": attempt,
-                },
-            )
-
-        summary = {
-            "pass_id": pass_id,
-            "assignments": sorted(assignments),
-            "affected_files": len(affected),
-            "replans": attempt,
-        }
-        return added, removed, summary, finish
-
-    return _run_with_replans(table, ledger, "update", max_replans, _attempt)
+    return _rewrite_pass(
+        table, spark, "update", pass_id or _new_pass_id("update"), max_replans, plan,
+        target_file_bytes, transform=apply,
+    )
 
 
 def reencrypt(
@@ -1400,7 +1177,6 @@ def reencrypt(
     envelope_columns=("content_enc",),
     pass_id: str | None = None,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    wave_files: int = DEFAULT_WAVE_FILES,
     max_replans: int = 3,
 ) -> PassResult:
     """Key-rotation rewrite (A-side versioning — the reference's own
@@ -1410,9 +1186,8 @@ def reencrypt(
     (``crypto.make_reencrypt_udf``); all other files stay untouched
     manifest entries, all other rows pass through byte-identical.
     Execution shape is exactly shred's: bloom-targeted inputs,
-    scan-packed waves, a narrow per-batch UDF, no shuffle — and the
-    same conflict re-planning (a racing pass that rewrote this pass's
-    inputs triggers a fresh-snapshot re-target; see ``shred``).
+    scan-packed waves, a narrow per-batch UDF, no shuffle, and the
+    same re-targeting on a re-plan.
 
     ``keys_versioned`` must come from ``KeyRegistry.key_map_versioned``
     (plain dict or broadcast) — old materials decrypt, the latest one
@@ -1421,16 +1196,8 @@ def reencrypt(
     ciphertext (e.g. an expired snapshot's files) unrecoverable."""
     from pi2spark.crypto import make_reencrypt_udf
 
-    t0 = time.time()
     subjects = sorted(set(subjects))
-    pass_id = pass_id or _new_pass_id("reencrypt")
-    ledger = PassLedger(table.root, pass_id)
-    if ledger.committed:
-        return PassResult("reencrypt", pass_id, ledger.committed["snapshot_id"], 0, 0, 0, 0.0, skipped=True)
-    if not subjects:
-        return PassResult("reencrypt", pass_id, table.current_snapshot_id(), 0, 0, 0, 0.0, skipped=True)
-
-    pred = ColumnPredicate(subject_column, "in", values=tuple(subjects))
+    preds = [ColumnPredicate(subject_column, "in", values=tuple(subjects))]
     udf = make_reencrypt_udf(keys_versioned, subjects)
 
     def reseal(df: DataFrame) -> DataFrame:
@@ -1446,53 +1213,13 @@ def reencrypt(
                 )
         return out.select(*df.columns)
 
-    def _attempt(attempt: int, prefix: str):
-        snap = table.snapshot()
-        affected = [f for f in snap.files if pred.may_match(f)]
-        if not affected:
-            return PassResult("reencrypt", pass_id, snap.snapshot_id, 0, 0, 0, time.time() - t0, skipped=True)
+    def plan(snap: Snapshot) -> _Plan | None:
+        return _targeted_plan(snap, preds, {"subjects": subjects}) if subjects else None
 
-        results = _rewrite_files_in_waves(
-            table,
-            spark,
-            ledger,
-            sorted(affected, key=lambda f: f.path),
-            f"reencrypt-{pass_id}",
-            target_bytes=target_file_bytes,
-            transform=reseal,
-            sort_col="zkey",
-            wave_files=wave_files,
-            task_prefix=prefix,
-        )
-        removed = [p for r in results for p in r["inputs"]]
-        added = [DataFile.from_json(d) for r in results for d in r["outputs"]]
-
-        def finish(new_snap):
-            ledger.record_commit(new_snap.snapshot_id)
-            return PassResult(
-                "reencrypt",
-                pass_id,
-                new_snap.snapshot_id,
-                rewritten_files=len(affected),
-                added_files=len(added),
-                rewritten_bytes=sum(f.bytes for f in affected),
-                seconds=time.time() - t0,
-                details={
-                    "affected_files": len(affected),
-                    "total_files": len(snap.files),
-                    "replans": attempt,
-                },
-            )
-
-        summary = {
-            "pass_id": pass_id,
-            "subjects": subjects,
-            "affected_files": len(affected),
-            "replans": attempt,
-        }
-        return added, removed, summary, finish
-
-    return _run_with_replans(table, ledger, "reencrypt", max_replans, _attempt)
+    return _rewrite_pass(
+        table, spark, "reencrypt", pass_id or _new_pass_id("reencrypt"), max_replans, plan,
+        target_file_bytes, transform=reseal,
+    )
 
 
 def rotate_many_and_reencrypt(
@@ -1505,21 +1232,32 @@ def rotate_many_and_reencrypt(
     **kw,
 ) -> PassResult:
     """Rotate N subjects in ONE rewrite pass: mint a material per
-    subject (each recorded in the ledger before any wave — same
-    resume-idempotency contract as the single-subject flow), then a
+    subject (each recorded in the ledger before any wave), then a
     single ``reencrypt`` over the UNION of affected files, then retire
     per subject. A file holding rows of k rotating subjects is
     rewritten once, not k times — the difference between O(files) and
     O(files × subjects) when a rotation policy cycles a whole cohort
-    (e.g. scheduled annual rotation)."""
+    (e.g. scheduled annual rotation).
+
+    Resume-safe: a rerun with the same ``pass_id`` reuses the recorded
+    materials instead of rotating again. Without this, a resume would
+    mint fresh materials, replay ledger-cached waves that still
+    reference the previous ones, and the final retire would destroy
+    the only keys those rows were sealed under — silent, permanent data
+    loss. The retire additionally verifies each recorded material is
+    still the registry's latest before redacting anything."""
     from pi2spark.crypto import broadcast_keys
 
     subjects = sorted(set(subject_ids))
-    if not subjects:
-        return PassResult("reencrypt", pass_id or _new_pass_id("reencrypt"), table.current_snapshot_id(), 0, 0, 0, 0.0, skipped=True)
     pass_id = pass_id or _new_pass_id("reencrypt")
+    if not subjects:
+        return PassResult("reencrypt", pass_id, table.current_snapshot_id(), 0, 0, 0, 0.0, skipped=True)
     ledger = PassLedger(table.root, pass_id)
-    minted = ledger.meta("rotated_mids") or {}
+    minted = ledger.meta("rotated_mids")
+    if minted is None:
+        # single-subject rotation ledgers record one bare material id
+        legacy = ledger.meta("rotated_mid")
+        minted = {} if legacy is None else {subjects[0]: legacy}
     if minted and set(minted) != set(subjects):
         # a resume must replay the SAME cohort: cached waves were
         # computed against the recorded subject set, and mixing them
@@ -1561,45 +1299,14 @@ def rotate_and_reencrypt(
     retire: bool = True,
     **kw,
 ) -> PassResult:
-    """The complete key-rotation flow: ROTATE (new material), reencrypt
-    the subject's files under it, then (by default) RETIRE the old
-    materials — physically redacting their key bytes from the command
-    log, so only ciphertext sealed under the new key remains readable
-    anywhere.
+    """The complete key-rotation flow for one subject: ROTATE (new
+    material), reencrypt the subject's files under it, then (by
+    default) RETIRE the old materials — physically redacting their key
+    bytes from the command log, so only ciphertext sealed under the new
+    key remains readable anywhere. A one-subject
+    ``rotate_many_and_reencrypt``, with the same resume guarantees."""
+    return rotate_many_and_reencrypt(table, spark, registry, [subject_id], retire=retire, **kw)
 
-    Resume-safe: the minted material id is written to the pass ledger
-    BEFORE any file is rewritten, and a rerun with the same ``pass_id``
-    reuses that material instead of rotating again. Without this, a
-    resume would mint a fresh material, replay ledger-cached waves that
-    still reference the previous one, and the final retire would
-    destroy the only key those rows were sealed under — silent,
-    permanent data loss. The retire additionally verifies the recorded
-    material is still the registry's latest before redacting anything."""
-    from pi2spark.crypto import broadcast_keys
-
-    pass_id = kw.pop("pass_id", None) or _new_pass_id("reencrypt")
-    ledger = PassLedger(table.root, pass_id)
-    minted = ledger.meta("rotated_mid")
-    if minted is None:
-        minted = registry.rotate(subject_id).material_id
-        ledger.record_meta("rotated_mid", minted)
-    elif registry.latest_material_id(subject_id) != minted:
-        # the registry moved on (another rotation) since this pass
-        # minted its material — resuming would seal fresh waves under a
-        # different key than the ledger-cached ones; refuse loudly
-        raise MissingCryptoMaterialsError(
-            f"resume of pass {pass_id!r}: recorded material {minted} is no "
-            f"longer the latest for subject {subject_id!r}; run a fresh "
-            "rotation pass instead of resuming this one"
-        )
-    keys = broadcast_keys(spark, registry.key_map_versioned())
-    res = reencrypt(table, spark, keys, [subject_id], pass_id=pass_id, **kw)
-    # ALWAYS attempt retirement (idempotent): a resume after a crash
-    # between the reencrypt commit and retire sees res.skipped=True —
-    # gating on it would leave the old key bytes live forever
-    if retire and registry.latest_material_id(subject_id) == minted:
-        registry.retire_old_materials(subject_id)
-    return res
 
 
 def maintain(

@@ -163,7 +163,7 @@ def test_expire_deletes_unreferenced_files(spark, loaded):
 def test_compaction_resume_after_partial_failure(spark, loaded, monkeypatch):
     """Kill compaction after wave 1 of n; rerun with same pass_id skips
     the completed wave, finishes the rest; scan digest identical
-    (FIXTURES.md §4 case 7). wave_files=4 forces multiple waves at
+    (FIXTURES.md §4 case 7). DEFAULT_WAVE_FILES=4 forces multiple waves at
     this file count (resume granularity is the wave)."""
     t, reg, keys, baseline = loaded
     import pi2spark.maintenance as M
@@ -177,14 +177,15 @@ def test_compaction_resume_after_partial_failure(spark, loaded, monkeypatch):
             raise RuntimeError("simulated crash mid-pass")
         return orig(*a, **kw)
 
+    monkeypatch.setattr(M, "DEFAULT_WAVE_FILES", 4)
     monkeypatch.setattr(M, "collect_data_files", flaky)
     with pytest.raises(RuntimeError):
-        compact(t, spark, target_file_bytes=300 * 1024, wave_files=4, pass_id="compact-resume-test")
+        compact(t, spark, target_file_bytes=300 * 1024, pass_id="compact-resume-test")
     monkeypatch.setattr(M, "collect_data_files", orig)
 
     # no commit happened: table still at snapshot 1
     assert t.current_snapshot_id() == 1
-    res = compact(t, spark, target_file_bytes=300 * 1024, wave_files=4, pass_id="compact-resume-test")
+    res = compact(t, spark, target_file_bytes=300 * 1024, pass_id="compact-resume-test")
     assert not res.skipped
     assert _digest(t, spark, keys) == baseline
     # rerun after commit is a no-op
